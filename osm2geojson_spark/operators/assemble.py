@@ -22,7 +22,6 @@ no row-at-a-time Python UDFs.
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -383,11 +382,6 @@ def batched_rel_kernel(row_fn):
 def _coords_from_structs(col: Column) -> Column:
     """array<struct<lon,lat>> -> flat array<double> for packing."""
     return F.flatten(F.transform(col, lambda p: F.array(p["lon"], p["lat"])))
-
-
-@dataclass
-class AssembledWays:
-    df: DataFrame  # way_id,id,seq,branch,coords,closed,is_poly,gpb,reason,used_node_refs,...
 
 
 def resolve_ways(frames: ElementFrames, area_keys=None, polygon_features=None) -> DataFrame:

@@ -888,11 +888,11 @@ def _guard_gemm_collect(df: DataFrame, what: str, max_rows: int) -> None:
     """Hard guard for the driver-collect + broadcast GEMM helpers: these
     exact paths are the validation/queue-sized oracle shape, not the
     corpus-scale path. Count first and refuse past ``max_rows`` with
-    compose guidance instead of silently OOM-ing the driver."""
-    n = df.count()
-    if n > max_rows:
+    compose guidance instead of silently OOM-ing the driver. The count
+    stops at ``max_rows + 1``, so the guard costs O(max_rows), not O(rows)."""
+    if df.limit(max_rows + 1).count() > max_rows:
         raise ValueError(
-            f"{what}: corpus has {n} rows > max_rows={max_rows}; this exact "
+            f"{what}: corpus has more than max_rows={max_rows} rows; this exact "
             "GEMM path collects the table to the driver and broadcasts one "
             "NumPy matrix. At corpus scale restrict candidates first with the "
             "distributed ANN operators (ann_cosine_ivf / ann_pq_scan / "

@@ -14,7 +14,6 @@ whole XML documents with ``mapInPandas`` so each file parses on an executor.
 
 from __future__ import annotations
 
-from typing import Iterator
 from xml.etree import ElementTree
 
 _META_INT = {"version", "changeset", "uid"}
@@ -182,11 +181,3 @@ def parse(xml_str: str) -> dict | None:
         doc.setdefault("osm3s", {})["timestamp_osm_base"] = timestamp_osm_base
     return doc
 
-
-def xml_docs_to_elements(xml_docs) -> Iterator[dict]:
-    """Parse an iterable of XML document strings into element dicts
-    (executor-side helper for mapInPandas bulk ingestion)."""
-    for doc in xml_docs:
-        parsed = parse(doc)
-        if parsed:
-            yield from parsed["elements"]
